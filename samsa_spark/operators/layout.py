@@ -179,22 +179,37 @@ def write_zordered(
     parquet footer. Returns the manifest."""
     cols = list(cols)
     bits = _nd_bits(len(cols), bits)
-    stats = df.agg(
-        *[f(c) for c in cols for f in (F.min, F.max)]
+    n_rows, *stats = df.agg(
+        F.count(F.lit(1)), *[f(c) for c in cols for f in (F.min, F.max)]
     ).first()
     q = [
         _quantized(c, stats[2 * i], stats[2 * i + 1], bits)
         for i, c in enumerate(cols)
     ]
-    (
-        df.withColumn("_z", zvalue_nd(q, bits))
-        .repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(f"{path}/data")
-    )
     spark = df.sparkSession
+    # The range exchange places file boundaries from a reservoir sample of
+    # 100 keys per file, seeded by the sampled RDD's id: the boundaries (and
+    # how many files a box query opens) moved with whatever ran earlier in
+    # the session. Asking for a key per input row makes the sample every row
+    # up to Spark's own 1e6-key sample cap, so the boundaries are exact
+    # quantiles of z there and a bounded sample beyond it.
+    sample_conf = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    prev = spark.conf.get(sample_conf, None)
+    spark.conf.set(sample_conf, str(max(100, -(-n_rows // n_files))))
+    try:
+        (
+            df.withColumn("_z", zvalue_nd(q, bits))
+            .repartitionByRange(n_files, F.col("_z"))
+            .sortWithinPartitions("_z")
+            .drop("_z")
+            .write.mode("overwrite")
+            .parquet(f"{path}/data")
+        )
+    finally:
+        if prev is None:
+            spark.conf.unset(sample_conf)
+        else:
+            spark.conf.set(sample_conf, prev)
     manifest = (
         spark.read.parquet(f"{path}/data")
         .select(

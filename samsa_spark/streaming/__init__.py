@@ -6,7 +6,7 @@ changelog replication (storage.py:129-149), partition-rebalance recovery
 engine-managed rather than hand-rolled:
 
 - consume/poll loop        -> micro-batch engine + Trigger
-- SQLite/RocksDB K/V table -> RocksDB state store (ValueState per key)
+- SQLite/RocksDB K/V table -> RocksDB state store (one latest row per key)
 - changelog topics         -> state checkpoint (+ optional explicit
                               changelog sink for external readers)
 - rebalance + replay       -> checkpoint restore on restart/rescale

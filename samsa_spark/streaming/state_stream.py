@@ -1,27 +1,45 @@
 """StatefulStream: the reference's ``StatefulConsumer`` rebuilt on
-Structured Streaming stateful processing (applyInPandasWithState).
+Structured Streaming stateful operators.
 
 Reference semantics being replaced (samsa/kafka/storage.py):
-- ``consume(callback)`` storage.py:228-253 -> the per-key fold function
-- ``save(key, value)``  storage.py:190-206 -> ``GroupState.update``
-- ``query(key)``        storage.py:208-219 -> ``GroupState.get`` inside the
-  operator; :func:`read_state` outside it (state data source reader)
+- ``consume(callback)`` storage.py:228-253 -> the per-key state update
+- ``save(key, value)``  storage.py:190-206 -> the keyed state store write
+- ``query(key)``        storage.py:208-219 -> :func:`read_state` (state data
+  source reader) outside the operator
 - changelog topics      storage.py:129-149 -> state checkpoint (engine) and
   the update-mode output rows this operator emits (external changelog)
 - recovery replay       storage.py:151-184 -> checkpoint restore on restart
 
-API choice: Spark 4 offers transformWithStateInPandas (richer: timers,
-multiple state variables) but its Python worker requires protobuf, absent
-in this container; applyInPandasWithState expresses the samsa semantics
-(single ValueState per key, update-mode changelog) with no extra deps and
-is the stable API since 3.4.
+Two operators carry the same last-writer-wins state:
+
+- **Native aggregate (the default).** Without ``ttl`` or ``eager_delete``,
+  the state is ``max(struct(order..., value...[, _tombstoned]))`` per key,
+  a streaming aggregation in update mode: the engine owns the fold, the
+  RocksDB store holds the struct, and no Python worker starts. Marker-mode
+  tombstones ride in the struct as the ``_tombstoned`` flag. Ties on the
+  whole order tuple are broken by the payload columns (then the flag) in
+  Spark's ordering, and a NULL in any column sorts below every value, so
+  the winner is deterministic whatever the arrival order.
+- **Pandas fold** (:func:`_build_fold`, ``applyInPandasWithState``). Kept
+  for ``ttl`` (event-time timeouts) and ``eager_delete``
+  (``state.remove()``), which an aggregate cannot express, and for
+  checkpoints the fold already wrote: Spark refuses to resume a checkpoint
+  under a different operator, so :meth:`StatefulStream.updates` probes an
+  existing checkpoint's state schema and stays on the fold for it.
+
+API choice for the fold: Spark 4 offers transformWithStateInPandas (richer:
+timers, multiple state variables) but its Python worker requires protobuf,
+absent in this container; applyInPandasWithState expresses the samsa
+semantics (single ValueState per key, update-mode changelog) with no extra
+deps and is the stable API since 3.4.
 
 One semantic caveat carried over deliberately (SURVEY.md §7 "hard parts"):
 samsa interleaves query/save per *message*; Spark hands the operator a
-*batch* of rows per key per trigger. The fold is applied in ``(ts_us,
-event_id)`` order within the batch, so read-your-own-write semantics are
-preserved at batch granularity — property-tested against batch compaction
-in tests/test_streaming.py.
+*batch* of rows per key per trigger. Either operator keeps the maximal
+``(order...)`` row of the batch against prior state, so read-your-own-write
+semantics are preserved at batch granularity — tested against batch
+compaction in tests/test_streaming.py and the two operators against each
+other in tests/test_streaming_equivalence.py.
 
 Scale: state lives in per-partition RocksDB instances keyed by the groupBy
 key — the same partitioned-state layout samsa approximates with one SQLite
@@ -33,12 +51,42 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import StructType
 
 ROCKSDB_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 DEFAULT_PROVIDER = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+
+
+def _select_store(spark: SparkSession, store: str) -> None:
+    """Select the state-store provider the way samsa's ``store=`` enum does
+    (db/__init__.py:10-15) — here a session conf, not an implementation:
+    "rocksdb" for the RocksDB provider (changelog-checkpointed, the
+    Kafka-Streams-alike), "default" for the HDFS-backed in-memory provider
+    (the SQLite-ish fallback)."""
+    if store == "rocksdb":
+        spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+        # Changelog checkpointing: commit the per-batch delta instead of
+        # uploading a full RocksDB snapshot every commit (guide §5/§6 —
+        # r15 A/B: −1.5 s on a 2-trigger 7.5k-key drain; at volume the
+        # snapshot upload grows with STATE size while the changelog
+        # grows with the BATCH). Snapshots still land in the background
+        # per minBatchesToRetain, so restart cost stays bounded.
+        spark.conf.set(
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+            "true",
+        )
+    elif store == "default":
+        # Explicit, not a no-op: a prior store="rocksdb" stream set the
+        # session conf, and "default" must actually select the HDFS-backed
+        # provider rather than silently inherit RocksDB.
+        spark.conf.set("spark.sql.streaming.stateStore.providerClass", DEFAULT_PROVIDER)
+    else:
+        # reference parity: storage.py:221-224 raises
+        # UnknownDatabaseSpecified for anything but sqlite/rocksdb
+        raise ValueError(f"unknown store {store!r}: expected 'rocksdb' or 'default'")
 
 
 def _build_fold(
@@ -186,11 +234,8 @@ class StatefulStream:
 
     Parameters mirror the reference ctor (storage.py:17-26): the key column
     is the message key, value columns the payload, order columns the log
-    order. ``store`` selects the state backend the way samsa's ``store=``
-    enum does (db/__init__.py:10-15) — here it's a Spark provider conf, not
-    an implementation: "rocksdb" for the RocksDB provider (changelog-
-    checkpointed, the Kafka-Streams-alike), "default" for the HDFS-backed
-    in-memory provider (the SQLite-ish fallback).
+    order. ``store`` selects the state backend, "rocksdb" or "default"
+    (:func:`_select_store`).
 
     ``ttl=(order_col, horizon)`` turns on opt-in state eviction: a key whose
     high-water mark falls more than ``horizon`` (an interval string, e.g.
@@ -233,29 +278,7 @@ class StatefulStream:
         self.tombstone = tombstone
         self.eager_delete = eager_delete
         self.ttl = ttl
-        if store == "rocksdb":
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-            # Changelog checkpointing: commit the per-batch delta instead of
-            # uploading a full RocksDB snapshot every commit (guide §5/§6 —
-            # r15 A/B: −1.5 s on a 2-trigger 7.5k-key drain; at volume the
-            # snapshot upload grows with STATE size while the changelog
-            # grows with the BATCH). Snapshots still land in the background
-            # per minBatchesToRetain, so restart cost stays bounded.
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-                "true",
-            )
-        elif store == "default":
-            # Explicit, not a no-op: a prior store="rocksdb" stream set the
-            # session conf, and "default" must actually select the HDFS-backed
-            # provider rather than silently inherit RocksDB.
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", DEFAULT_PROVIDER)
-        else:
-            # reference parity: storage.py:221-224 raises
-            # UnknownDatabaseSpecified for anything but sqlite/rocksdb
-            raise ValueError(
-                f"unknown store {store!r}: expected 'rocksdb' or 'default'"
-            )
+        _select_store(spark, store)
 
     def _schemas(self, src: DataFrame) -> tuple[StructType, StructType]:
         fields = {f.name: f.dataType.simpleString() for f in src.schema.fields}
@@ -278,14 +301,52 @@ class StatefulStream:
             out_ddl += ", _deleted boolean"
         return StructType.fromDDL(state_ddl), StructType.fromDDL(out_ddl)
 
-    def updates(self, stream_df: DataFrame) -> DataFrame:
+    def updates(self, stream_df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
         """Update-mode stream of state changes — the external changelog
-        (reference O7, storage.py:129-149): one row per key per trigger in
-        which the key's latest value advanced. With a tombstone configured,
-        a delete surfaces as a null-payload row (Kafka tombstone shape);
-        with ``ttl`` configured, watermark evictions surface the same way
+        (reference O7, storage.py:129-149). With a tombstone configured, a
+        delete surfaces as a null-payload row (Kafka tombstone shape); with
+        ``ttl`` configured, watermark evictions surface the same way
         (``_deleted`` true), so a changelog built from this stream replays
-        to exactly the surviving state."""
+        to exactly the surviving state.
+
+        Which rows a trigger emits depends on the operator (module
+        docstring): the native aggregate emits every key the trigger
+        touched, with its current latest value even when that value did not
+        advance; the fold emits only keys whose value advanced. Either way a
+        key's emitted order never goes backwards, and replaying the rows
+        last-writer-wins by batch id gives the same table.
+
+        Pass the query's ``checkpoint_dir`` when resuming one: a checkpoint
+        the fold wrote then stays on the fold (Spark refuses to resume it
+        under another operator). :meth:`run_available_now` passes it."""
+        if (
+            self.ttl is None
+            and not self.eager_delete
+            and not (checkpoint_dir is not None and _written_by_fold(self.spark, checkpoint_dir))
+        ):
+            return self._latest_aggregate(stream_df)
+        return self._fold_updates(stream_df)
+
+    def _latest_aggregate(self, stream_df: DataFrame) -> DataFrame:
+        """Last-writer-wins as a streaming aggregate: the state per key is
+        ``max(struct(order..., value...[, _tombstoned]))``, the same tuple
+        the fold keeps, stored as the aggregate's ``max`` buffer."""
+        fields = [F.col(c) for c in (*self.order_cols, *self.value_cols)]
+        if self.tombstone is not None:
+            col, val = self.tombstone
+            fields.append(F.coalesce(F.col(col) == F.lit(val), F.lit(False)).alias("_tombstoned"))
+        latest = stream_df.groupBy(self.key_col).agg(F.max(F.struct(*fields)).alias("_latest"))
+        out = [F.col(self.key_col), *(F.col(f"_latest.{c}").alias(c) for c in self.order_cols)]
+        if self.tombstone is None:
+            out += [F.col(f"_latest.{c}").alias(c) for c in self.value_cols]
+        else:
+            dead = F.col("_latest._tombstoned")
+            out += [F.when(~dead, F.col(f"_latest.{c}")).alias(c) for c in self.value_cols]
+            out.append(dead.alias("_deleted"))
+        return latest.select(*out)
+
+    def _fold_updates(self, stream_df: DataFrame) -> DataFrame:
+        """The same state through the pandas fold (:func:`_build_fold`)."""
         state_schema, out_schema = self._schemas(stream_df)
         fold = _build_fold(
             self.key_col,
@@ -348,7 +409,7 @@ class StatefulStream:
         table exactly like reference recovery, storage.py:151-184).
         Returns after the query terminates.
         """
-        upd = self.updates(stream_df)
+        upd = self.updates(stream_df, checkpoint_dir)
         if changelog_dir is not None:
             self._check_changelog_compat(changelog_dir)
         if changelog_dir is None:
@@ -368,6 +429,23 @@ class StatefulStream:
         )
         q.awaitTermination()
         return q
+
+
+def _written_by_fold(spark: SparkSession, checkpoint_dir: str) -> bool:
+    """Whether ``checkpoint_dir`` holds state written by the pandas fold.
+    applyInPandasWithState wraps its state struct in a ``groupState`` field,
+    the aggregate stores a ``max`` buffer. The probe reads the state schema
+    (one metadata read, no job), and only when the checkpoint has state: a
+    fresh checkpoint, the common case, costs one existence check."""
+    jvm = spark.sparkContext._jvm
+    state_dir = jvm.org.apache.hadoop.fs.Path(checkpoint_dir, "state")
+    if not state_dir.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(state_dir):
+        return False
+    try:
+        value = spark.read.format("statestore").load(checkpoint_dir).schema["value"].dataType
+    except SparkRuntimeException:
+        return False  # STDS_COMMITTED_BATCH_UNAVAILABLE: any operator may start it
+    return value.fieldNames()[:1] == ["groupState"]
 
 
 def stateful_transform(
@@ -393,22 +471,7 @@ def stateful_transform(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout as _GST
 
-    if store == "rocksdb":
-        stream_df.sparkSession.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
-        # per-batch delta commits instead of full snapshot uploads (see
-        # StatefulStream.__init__ — same rationale and A/B)
-        stream_df.sparkSession.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
-    elif store == "default":
-        stream_df.sparkSession.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", DEFAULT_PROVIDER
-        )
-    else:
-        raise ValueError(f"unknown store {store!r}: expected 'rocksdb' or 'default'")
+    _select_store(stream_df.sparkSession, store)
 
     def wrapped(key, pdfs, state):
         parts = [p for p in pdfs if len(p)]
@@ -435,7 +498,7 @@ def read_state(spark: SparkSession, checkpoint_dir: str, drop_tombstoned: bool =
     storage.py:208-219): read the operator's state store directly from the
     checkpoint via the state data source, flattened to key + state columns.
 
-    Marker-mode deletions (see :func:`_build_fold`) keep ``_tombstoned``
+    Marker-mode deletions (see :class:`StatefulStream`) keep ``_tombstoned``
     rows in the store as high-water marks; ``drop_tombstoned`` hides them —
     a deleted key is absent from the queryable view, exactly like a key
     removed via ``RocksDBClient.delete`` (reference rocksdb.py:75-85).
@@ -453,15 +516,14 @@ def read_state(spark: SparkSession, checkpoint_dir: str, drop_tombstoned: bool =
     value_names = [f.name for f in value_type.fields]
     # applyInPandasWithState wraps the user state struct in a `groupState`
     # field (plus an engine-side `timeoutTimestamp` when a timeout conf —
-    # e.g. the TTL option — is active); unwrap so callers see their own
-    # state columns and never the engine bookkeeping.
-    if value_names[:1] == ["groupState"]:
-        prefix = "value.groupState"
-        state_fields = value_type.fields[0].dataType.fields
-        val_fields = [f"{prefix}.{f.name}" for f in state_fields]
+    # e.g. the TTL option — is active), and the native aggregate stores it
+    # as its `max` buffer; unwrap either so callers see their own state
+    # columns and never the engine bookkeeping.
+    if value_names[:1] == ["groupState"] or value_names == ["max"]:
+        wrapper = value_type.fields[0]
+        val_fields = [f"value.{wrapper.name}.{f.name}" for f in wrapper.dataType.fields]
     else:
-        state_fields = value_type.fields
-        val_fields = [f"value.{f.name}" for f in state_fields]
+        val_fields = [f"value.{f.name}" for f in value_type.fields]
     out = raw.select(*key_fields, *val_fields)
     if drop_tombstoned and "_tombstoned" in out.columns:
         out = out.where(~F.coalesce(F.col("_tombstoned"), F.lit(False))).drop("_tombstoned")
