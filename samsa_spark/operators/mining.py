@@ -404,11 +404,13 @@ def _collect_edge_pdf(e: DataFrame):
 
 
 def _round6_half_up(x: float) -> float:
-    """Bit-exact replica of Spark's ``round(double, 6)`` (BigDecimal
-    HALF_UP on the exact binary value of the double)."""
+    """Replica of Spark's ``round(double, 6)``: HALF_UP on the double's
+    shortest decimal form, which is what Scala's ``BigDecimal(d)`` takes
+    (``Double.toString``), not its exact binary value, so 0.1234565 rounds
+    up to 0.123457 although the double lies just below the half."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    return float(Decimal(x).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
 
 def _label_py(node: int) -> str:

@@ -148,7 +148,16 @@ def _build_fold(
     batch-equivalence guarantees tested are eventual (evicted keys stay
     gone, survivors equal batch compaction).
     """
+    import math
+
     import pandas as pd
+
+    def _nan_to_null(v):
+        # pandas hands a NULL double over as NaN; state keeps it NULL, as
+        # the changelog row (Arrow writes NaN as null) and batch compaction
+        # do. A genuine NaN payload is indistinguishable here, so it is
+        # stored as NULL too.
+        return None if isinstance(v, float) and math.isnan(v) else v
 
     ocols = list(order_cols)
     vcols = list(value_cols)
@@ -194,7 +203,7 @@ def _build_fold(
                 continue
             pdf = pdf.sort_values(ocols, kind="mergesort")
             last = pdf.iloc[-1]
-            cand = tuple(last[c] for c in ocols) + tuple(last[c] for c in vcols)
+            cand = tuple(last[c] for c in ocols) + tuple(_nan_to_null(last[c]) for c in vcols)
             if best is None or cand[:n_order] > best[:n_order]:
                 best = cand
         if best is None:

@@ -292,6 +292,20 @@ def test_pr1_driver_regime_matches_distributed_loop(spark):
     assert fast == slow
 
 
+def test_round6_half_up_matches_spark_round_on_boundary_values(spark):
+    """The driver regime's rounding replica against Spark's own
+    ``round(double, 6)`` on values whose shortest decimal form sits on the
+    half: the double's exact binary value lies below it for the first three,
+    which rounding the exact value got wrong (0.123456, 0.5, 0.250001, 0.0)."""
+    from samsa_spark.operators.mining import _round6_half_up
+
+    xs = [0.1234565, 0.5000005, 0.2500015, 5e-07, 0.0, 1.0, 0.9999995, 1234.5678905, 1e-06, 4.99999e-07]
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    want = [r.r for r in df.orderBy("i").select(F.round("x", 6).alias("r")).collect()]
+    assert [_round6_half_up(x) for x in xs] == want
+    assert want[:4] == [0.123457, 0.500001, 0.250002, 1e-06]
+
+
 def test_lp1_driver_regime_matches_distributed_loop(spark):
     """All-integer LPA: driver fast path == distributed window top-1,
     exactly (labels, communities, sizes, row order)."""

@@ -20,7 +20,6 @@ triggers:
 from __future__ import annotations
 
 import contextlib
-import math
 import os
 import random
 from collections import Counter
@@ -47,27 +46,27 @@ CONFIGS = {"plain": None, "marker": TOMB}
 FEEDS = {"plain": ((8301, 1), (8302, 3)), "marker": ((8303, 2), (8304, 4))}
 
 
-def _feed(seed: int, n: int, nulls: bool = True, eid0: int = 0) -> list[list[tuple]]:
+def _feed(seed: int, n: int, order_nulls: bool = True, eid0: int = 0) -> list[list[tuple]]:
     """A seeded keyed feed cut into ``n`` triggers: repeated keys within a
-    trigger and out-of-order events across triggers; with ``nulls``, also
-    NULL payloads, NULL order columns and equal order tuples carrying
+    trigger, out-of-order events across triggers and NULL payloads; with
+    ``order_nulls``, also NULL order columns and equal order tuples carrying
     different payloads."""
     rng = random.Random(seed)
     types = ["view", "click", "purchase", "error"]
 
-    def maybe(v, p):
-        return None if nulls and rng.random() < p else v
+    def maybe(v, p, on=True):
+        return None if on and rng.random() < p else v
 
     events = []
     for eid in range(eid0, eid0 + 100):
         events.append((
             rng.randrange(20),
-            maybe(rng.randrange(40), 0.03),
-            maybe(eid, 0.03),
+            maybe(rng.randrange(40), 0.03, order_nulls),
+            maybe(eid, 0.03, order_nulls),
             maybe(rng.choice(types), 0.1),
             maybe(rng.choice([0.5, 1.0, 2.5, 7.0]), 0.2),
         ))
-    if nulls:
+    if order_nulls:
         for k, ts, eid, _, _ in rng.sample(events, 6):
             events.append((k, ts, eid, rng.choice(types + [None]), rng.choice([None, 3.0, 9.5])))
     rng.shuffle(events)
@@ -111,8 +110,7 @@ def _fold_state(triggers, tombstone, keys) -> dict:
                 list(fold((k,), iter([pdf]), states[k]))
     out = {}
     for k, st in states.items():
-        # pandas holds a NULL double as NaN; the aggregate keeps it NULL
-        v = tuple(None if isinstance(x, float) and math.isnan(x) else x for x in st.get)
+        v = tuple(st.get)
         if tombstone is None:
             out[k] = v
         elif not v[-1]:
@@ -228,12 +226,14 @@ def test_updates_touched_keys_order_monotone_and_replay(spark, runs, name):
 def test_fold_checkpoint_resumes_on_fold(spark, name, tmp_path):
     """A checkpoint the fold wrote resumes on the fold (Spark refuses a
     different operator on it) and ends exact; numRowsTotal counts every key
-    (marker-deleted keys keep their high-water row). The feed has no NULLs:
-    the fold stores a NULL double as NaN."""
+    (marker-deleted keys keep their high-water row). The feed carries NULL
+    payloads, which state must hold as NULL, not as pandas' NaN; its order
+    tuples are unique and non-NULL, on which the fold's winner does not
+    depend on arrival order."""
     from samsa_spark.streaming.state_stream import StatefulStream, _written_by_fold
 
     tomb = CONFIGS[name]
-    first, rest = _feed(8310, 1, nulls=False), _feed(8311, 2, nulls=False, eid0=1000)
+    first, rest = _feed(8310, 1, order_nulls=False), _feed(8311, 2, order_nulls=False, eid0=1000)
     src, ck = str(tmp_path / "src"), str(tmp_path / "ck")
     _write_triggers(src, first)
     ss = StatefulStream(spark, KEY, ORDER, VALUES, tombstone=tomb)
@@ -255,5 +255,7 @@ def test_fold_checkpoint_resumes_on_fold(spark, name, tmp_path):
     assert op.operatorName == "applyInPandasWithState"
     feed = first + rest
     keys = {r[0] for t in feed for r in t}
-    assert _state(spark, ck) == _documented_state(feed, tomb) == _fold_state(feed, tomb, keys)
+    want = _documented_state(feed, tomb)
+    assert any(v[-1] is None for v in want.values()), "feed must leave NULL values in state"
+    assert _state(spark, ck) == want == _fold_state(feed, tomb, keys)
     assert op.numRowsTotal == len(keys)
