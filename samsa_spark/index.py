@@ -24,7 +24,11 @@ lives — append_index reads the stored element type, ivf_pq_topk derives
 the codebook stride (note 36), append_graph reads the graph meta — the
 meta file adds the human/audit copy and cross-version validation
 (append_dedup refuses an index whose recorded shingle width no longer
-matches the library's).
+matches the library's). The dedup index keeps its postings in ONE table,
+``<path>/sets`` (one row per doc, shingle hashes in the frozen rank order),
+beside its frozen ``<path>/df``; an index in the older two-table layout
+(``ranked`` plus unordered ``sets.shs``) fails every dedup verb with an
+AnalysisException before any job or write, so rebuild it with save_dedup.
 
 All lifecycle functions are THIN delegates: no new plan shapes, no new
 semantics. The original names keep working everywhere (this module is
@@ -333,8 +337,9 @@ def validate(spark: SparkSession, path: str, kind: str | None = None) -> DataFra
       assumes).
     - text: every posting doc has a doclens row; per-token docfreq
       partials sum to the posting list's distinct-doc count.
-    - dedup: ranked and sets agree on the doc set; per-doc ranked
-      positions are exactly 1..n_sh (dense, no gaps/dups).
+    - dedup: no duplicate doc_id in ``sets`` (its one posting table);
+      every row's ``n_sh`` equals the size of its ``ranked_shs``. An
+      index in the old two-table layout fails at analysis.
     """
     if kind is None:
         kind = read_meta(spark, path)["kind"]
@@ -464,36 +469,19 @@ def validate(spark: SparkSession, path: str, kind: str | None = None) -> DataFra
             .agg(F.count("*").alias("n")),
         )
     elif kind == "dedup":
-        ranked = spark.read.parquet(f"{path}/ranked")
         sets = spark.read.parquet(f"{path}/sets")
         add(
-            "ranked_doc_without_set",
-            ranked.select("doc_id")
-            .distinct()
-            .join(sets.select("doc_id"), "doc_id", "left_anti")
+            "duplicate_doc_id",
+            sets.groupBy("doc_id")
+            .agg(F.count("*").alias("c"))
+            .where(F.col("c") > 1)
             .agg(F.count("*").alias("n")),
         )
         add(
-            "set_doc_without_ranked",
-            sets.select("doc_id")
-            .join(ranked.select("doc_id").distinct(), "doc_id", "left_anti")
-            .agg(F.count("*").alias("n")),
-        )
-        per_doc = ranked.groupBy("doc_id").agg(
-            F.count("*").alias("c"),
-            F.countDistinct("pos").alias("cd"),
-            F.min("pos").alias("lo"),
-            F.max("pos").alias("hi"),
-            F.max("n_sh").alias("n_sh"),
-        )
-        add(
-            "ranked_positions_not_dense",
-            per_doc.where(
-                (F.col("lo") != 1)
-                | (F.col("hi") != F.col("c"))
-                | (F.col("cd") != F.col("c"))
-                | (F.col("n_sh") != F.col("c"))
-            ).agg(F.count("*").alias("n")),
+            "n_sh_not_ranked_size",
+            sets.where(F.col("n_sh") != F.size("ranked_shs")).agg(
+                F.count("*").alias("n")
+            ),
         )
     else:
         raise ValueError(f"validate: unknown index kind {kind!r}")

@@ -1019,100 +1019,98 @@ def char_dup_spans(documents: DataFrame, min_chars: int = CHAR_SPAN_K) -> DataFr
     )
 
 
+def _ranked_sets(g: DataFrame, dft: DataFrame) -> DataFrame:
+    """One row per doc of ``g``'s ``(doc_id, sh_h)`` postings: ``n_sh`` and
+    the shingle hashes in the canonical order ``(df, sh_h)`` of ``dft``
+    (unseen shingles df=0, ties broken by sh_h, so the order is total and
+    identical for every doc ever ranked against one df table), plus
+    ``n_unseen``, the count of df=0 shingles (drift, never stored)."""
+    df = F.coalesce("df", F.lit(0)).alias("df")
+    return (
+        g.join(dft, "sh_h", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.array_sort(F.collect_list(F.struct(df, "sh_h"))).alias("r"),
+            F.count("*").alias("n_sh"),
+            F.count_if(F.col("df").isNull()).alias("n_unseen"),
+        )
+        .select("doc_id", "n_sh", F.col("r.sh_h").alias("ranked_shs"), "n_unseen")
+    )
+
+
+_SETS_COLS = ("doc_id", "n_sh", "ranked_shs")
+
+
+def _read_sets(spark: SparkSession, path: str) -> DataFrame:
+    # resolving the stored columns fails an index in the old two-table
+    # layout (unordered ``shs``) at analysis, before any job or write
+    return spark.read.parquet(f"{path}/sets").select(*_SETS_COLS)
+
+
 def save_dedup_index(corpus: DataFrame, path: str) -> None:
     """dd19 build side — persist the exact-Jaccard dedup index the
-    incremental batch path queries: per-doc shingle-hash SETS
-    (``<path>/sets`` — the verify side), the same postings RANKED under
-    the rarest-first canonical order (``<path>/ranked`` — prefix
-    selection for any threshold becomes a pushed filter
-    ``pos <= n_sh - ceil(t*n_sh) + 1``, no window at query time), and the
-    document-frequency table that DEFINES that order (``<path>/df`` —
-    FROZEN from here on, the dedup-family parity of append_index's
-    frozen centroids: appended batches rank their shingles under this
-    saved order, unseen shingles at df=0, so every doc ever indexed
-    shares one total order and prefix filtering stays EXACT; only
-    prefix selectivity decays with drift, never correctness)."""
+    incremental batch path queries, as two tables: the document-frequency
+    table that DEFINES the canonical rarest-first order (``<path>/df``),
+    and ONE posting table, one row per doc (``<path>/sets``: ``doc_id``,
+    ``n_sh`` and ``ranked_shs``, the doc's shingle hashes in that order).
+    Prefix selection for any threshold is then ``slice(ranked_shs, 1,
+    n_sh - ceil(t*n_sh) + 1)`` — no window at query time — and the same
+    row is the verify side. ``df`` is FROZEN from here on (the dedup-family
+    parity of append_index's frozen centroids): appended batches rank
+    their shingles under this saved order, unseen shingles at df=0, so
+    every doc ever indexed shares one total order and prefix filtering
+    stays EXACT; only prefix selectivity decays with drift, never
+    correctness."""
     g = (
         shingle_postings(corpus)
         .select("doc_id", F.xxhash64("sh").alias("sh_h"))
         .localCheckpoint(eager=False)
     )
     # eager checkpoint (note 12, measured r15: 2.8 -> 2.4 s): dft feeds its
-    # own write AND the ranked join below — un-materialized, the ranked
+    # own write AND the ranking join below — un-materialized, the sets
     # write recomputed the whole df aggregate from g
     dft = g.groupBy("sh_h").agg(F.count("*").alias("df")).localCheckpoint(eager=True)
     dft.write.mode("overwrite").parquet(f"{path}/df")
-    w = Window.partitionBy("doc_id").orderBy("df", "sh_h")
-    ranked = (
-        g.join(dft, "sh_h")
-        .withColumn("pos", F.row_number().over(w))
-        .withColumn("n_sh", F.count("*").over(Window.partitionBy("doc_id")))
-        .select("doc_id", "sh_h", "pos", "n_sh")
+    _ranked_sets(g, dft).select(*_SETS_COLS).write.mode("overwrite").parquet(
+        f"{path}/sets"
     )
-    ranked.write.mode("overwrite").parquet(f"{path}/ranked")
-    sets = g.groupBy("doc_id").agg(
-        F.collect_set("sh_h").alias("shs"), F.count("*").alias("n_sh")
-    )
-    sets.write.mode("overwrite").parquet(f"{path}/sets")
 
 
 def _rank_under_frozen_order(spark: SparkSession, path: str, batch: DataFrame):
-    """(postings, ranked) for a batch under the index's FROZEN df order
-    (unseen shingles df=0 — ties broken by sh_h, so the order is total
-    and identical for every doc ever ranked against this index)."""
-    g = (
-        shingle_postings(batch)
-        .select("doc_id", F.xxhash64("sh").alias("sh_h"))
-        .localCheckpoint(eager=False)
-    )
-    dft = spark.read.parquet(f"{path}/df")
-    w = Window.partitionBy("doc_id").orderBy("df", "sh_h")
-    ranked = (
-        g.join(dft, "sh_h", "left")
-        .withColumn("df", F.coalesce("df", F.lit(0)))
-        .withColumn("pos", F.row_number().over(w))
-        .withColumn("n_sh", F.count("*").over(Window.partitionBy("doc_id")))
-        .select("doc_id", "sh_h", "pos", "n_sh", "df")
-    )
-    return g, ranked
+    """:func:`_ranked_sets` of a batch under the index's FROZEN df order."""
+    g = shingle_postings(batch).select("doc_id", F.xxhash64("sh").alias("sh_h"))
+    return _ranked_sets(g, spark.read.parquet(f"{path}/df"))
 
 
 def append_dedup_index(
     spark: SparkSession, path: str, batch: DataFrame, append_id: int | None = None
 ) -> DataFrame:
     """Incrementally add a batch to a saved dedup index (run AFTER
-    :func:`dedup_against_index` has vetted it): append the batch's sets
-    and frozen-order ranked postings, leave ``df`` untouched (the order
-    stays frozen — correctness forever, note 36's stance), and record
-    per-append drift: the fraction of batch shingle occurrences unseen
-    in the frozen df. Rising unseen fractions mean early (df=0) prefix
-    ranks get crowded and prefix selectivity decays — the rebuild
-    signal, exactly append_index's falling-assignment-cosine role.
-    ``doc_id`` uniqueness across the index and all appends is the
+    :func:`dedup_against_index` has vetted it): append the batch's
+    frozen-order ``sets`` rows — the ONE posting write — leave ``df``
+    untouched (the order stays frozen — correctness forever, note 36's
+    stance), and record per-append drift: the fraction of batch shingle
+    occurrences unseen in the frozen df. Rising unseen fractions mean
+    early (df=0) prefix ranks get crowded and prefix selectivity decays —
+    the rebuild signal, exactly append_index's falling-assignment-cosine
+    role. ``doc_id`` uniqueness across the index and all appends is the
     caller's contract. Returns the cumulative drift table.
 
     IDEMPOTENT under re-delivery (append_index's note-50 pattern):
     doc_ids the index already holds are anti-joined away (one pruned
     column scan of the stored sets), so a replayed batch appends zero
-    rows; with an explicit ``append_id`` (the streaming path) the drift
-    rows — computed over the FULL incoming batch, hence recomputable on
-    retry — overwrite their own ``append_id=`` partition."""
-    g, ranked = _rank_under_frozen_order(spark, path, batch)
-    ranked = ranked.localCheckpoint(eager=False)  # fresh-write + drift (note 12)
-    have = spark.read.parquet(f"{path}/sets").select("doc_id")
-    fresh = ranked.join(have, "doc_id", "left_anti")
-    fresh.select("doc_id", "sh_h", "pos", "n_sh").write.mode("append").parquet(
-        f"{path}/ranked"
-    )
-    sets = (
-        g.join(have, "doc_id", "left_anti")
-        .groupBy("doc_id")
-        .agg(F.collect_set("sh_h").alias("shs"), F.count("*").alias("n_sh"))
-    )
-    sets.write.mode("append").parquet(f"{path}/sets")
-    # a same-session reader of these paths must not serve the stale
+    rows, and a crash after the sets append leaves nothing a retry could
+    duplicate; with an explicit ``append_id`` (the streaming path) the
+    drift rows — computed over the FULL incoming batch, hence
+    recomputable on retry — overwrite their own ``append_id=`` partition."""
+    have = _read_sets(spark, path).select("doc_id")
+    bsets = _rank_under_frozen_order(spark, path, batch)
+    bsets = bsets.localCheckpoint(eager=False)  # fresh-write + drift (note 12)
+    bsets.join(have, "doc_id", "left_anti").select(*_SETS_COLS).write.mode(
+        "append"
+    ).parquet(f"{path}/sets")
+    # a same-session reader of this path must not serve the stale
     # pre-append file listing (note 28)
-    spark.catalog.refreshByPath(f"{path}/ranked")
     spark.catalog.refreshByPath(f"{path}/sets")
     from pyspark.errors import AnalysisException
 
@@ -1126,12 +1124,10 @@ def append_dedup_index(
         else:
             last = prev.agg(F.max("append_id")).collect()[0][0]
             next_id = 0 if last is None else last + 1
-    drift = ranked.agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.count("*").alias("n_postings"),
-        F.round(F.avg((F.col("df") == 0).cast("double")), 6).alias(
-            "unseen_fraction"
-        ),
+    drift = bsets.agg(
+        F.count("*").alias("n_docs"),
+        F.coalesce(F.sum("n_sh"), F.lit(0)).alias("n_postings"),
+        F.round(F.sum("n_unseen") / F.sum("n_sh"), 6).alias("unseen_fraction"),
     ).withColumn("append_id", F.lit(next_id))
     if append_id is not None:
         prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -1159,43 +1155,42 @@ def dedup_against_index(
     """dd19 — incremental EXACT threshold-Jaccard dedup of a new batch
     against a persisted corpus index (plus within-batch pairs): the
     production ingest path — the already-indexed corpus is never
-    re-shingled, re-ranked or self-joined; only its PREFIX rows (a
-    pushed ``pos`` filter on the ranked parquet) and the candidate
-    docs' set arrays are read. Same exactness as dd16 (prefix filtering
-    under one total order loses nothing; candidates verify against full
-    sets), so the output equals ``prefix_jaccard_pairs(index UNION
-    batch)`` restricted to pairs touching the batch — the equivalence a
-    pytest locks, and what makes the DuckDB twin dd2's SQL with the
-    threshold and a batch-membership filter.
+    re-shingled, re-ranked or self-joined; one table, ``sets``, answers
+    both sides: each row's prefix slice of ``ranked_shs`` feeds the
+    candidate join and the whole array the verify join. Same exactness
+    as dd16 (prefix filtering under one total order loses nothing;
+    candidates verify against full sets), so the output equals
+    ``prefix_jaccard_pairs(index UNION batch)`` restricted to pairs
+    touching the batch — the equivalence a pytest locks, and what makes
+    the DuckDB twin dd2's SQL with the threshold and a batch-membership
+    filter.
 
     Output ``(doc_a, doc_b, n_inter, jaccard)`` with ``doc_a < doc_b``
     and at least one side in the batch.
 
     Scale shape: per ingest batch the cost is the batch's shingling, one
     broadcast-sized df lookup join, a prefix equi-join whose INDEX side
-    is a pushed-filter parquet scan (~(1-t) of index postings), and a
-    verify join semi-pruned to candidate doc ids. Re-ranking the corpus
-    under fresh df would be cheaper prefixes but a full re-index —
-    dd16 is that batch form; dd19 is the incremental one.
+    explodes ~(1-t) of each stored row's array, and a verify join
+    semi-pruned to candidate doc ids. Re-ranking the corpus under fresh
+    df would be cheaper prefixes but a full re-index — dd16 is that
+    batch form; dd19 is the incremental one.
     """
     t = float(min_jaccard)
-    bg, branked = _rank_under_frozen_order(spark, path, batch)
-    # EAGER checkpoint (note 12): branked feeds the cross join, BOTH sides
-    # of the within self-join and (via bg's lazy checkpoint, completed by
-    # this materialization) the bsets aggregate — the r15 plan audit found
-    # the un-materialized form recomputing the shingle+df-join+window
-    # subtree per reference (12 Window nodes / 32 Exchanges in one action).
-    branked = branked.localCheckpoint(eager=True)
-    plen = F.col("n_sh") - _exact_ceil_mul(t) + 1
-    bpref = branked.where(F.col("pos") <= plen).select("doc_id", "sh_h")
-    ipref = (
-        spark.read.parquet(f"{path}/ranked")
-        .where(F.col("pos") <= plen)
-        .select("doc_id", "sh_h")
-    )
+    isets = _read_sets(spark, path)
+    # EAGER checkpoint (note 12): bsets feeds the cross join, BOTH sides
+    # of the within self-join and the verify union — un-materialized,
+    # each reference recomputes the shingle+df-join+rank subtree.
+    bsets = _rank_under_frozen_order(spark, path, batch).select(*_SETS_COLS)
+    bsets = bsets.localCheckpoint(eager=True)
+    plen = (F.col("n_sh") - _exact_ceil_mul(t) + 1).cast("int")
+
+    def prefix(rows: DataFrame) -> DataFrame:
+        return rows.select("doc_id", F.explode(F.slice("ranked_shs", 1, plen)).alias("sh_h"))
+
+    bpref = prefix(bsets)
     cross = (
         bpref.alias("b")
-        .join(ipref.alias("a"), "sh_h")
+        .join(prefix(isets).alias("a"), "sh_h")
         .select(
             F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
             F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
@@ -1213,26 +1208,19 @@ def dedup_against_index(
         )
     )
     cand = cross.unionByName(within).where(F.col("doc_a") < F.col("doc_b")).distinct()
-    bsets = bg.groupBy("doc_id").agg(
-        F.collect_set("sh_h").alias("shs"), F.count("*").alias("n_sh")
-    )
     # dropDuplicates: a batch REPLAYED after its append landed exists on
-    # both sides of this union (identical shingle sets); without the
-    # dedup every pair touching it would verify twice and the output
-    # would carry duplicate rows (the st10 exactly-once contract)
-    sets = (
-        spark.read.parquet(f"{path}/sets")
-        .unionByName(bsets)
-        .dropDuplicates(["doc_id"])
-    )
+    # both sides of this union (identical rows); without the dedup every
+    # pair touching it would verify twice and the output would carry
+    # duplicate rows (the st10 exactly-once contract)
+    sets = isets.unionByName(bsets).dropDuplicates(["doc_id"])
     sa = sets.select(
         F.col("doc_id").alias("doc_a"),
-        F.col("shs").alias("shs_a"),
+        F.col("ranked_shs").alias("shs_a"),
         F.col("n_sh").alias("n_a"),
     )
     sb = sets.select(
         F.col("doc_id").alias("doc_b"),
-        F.col("shs").alias("shs_b"),
+        F.col("ranked_shs").alias("shs_b"),
         F.col("n_sh").alias("n_b"),
     )
     inter = F.size(F.array_intersect("shs_a", "shs_b"))

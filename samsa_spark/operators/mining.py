@@ -388,21 +388,6 @@ def _node_side(df: DataFrame, small: bool) -> DataFrame:
     return F.broadcast(df) if small else df.hint("shuffle_hash")
 
 
-def _collect_edge_pdf(e: DataFrame):
-    """Arrow-collect a (src, dst, w) edge frame to pandas, forcing the Arrow
-    transfer path for the duration of the call only (the external driver's
-    vanilla session has it off, and flipping it permanently could change
-    how that session's OWN toPandas comparisons materialize)."""
-    spark = e.sparkSession
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(key, "false")
-    spark.conf.set(key, "true")
-    try:
-        return e.toPandas()
-    finally:
-        spark.conf.set(key, prev)
-
-
 def _round6_half_up(x: float) -> float:
     """Replica of Spark's ``round(double, 6)``: HALF_UP on the double's
     shortest decimal form, which is what Scala's ``BigDecimal(d)`` takes
@@ -426,7 +411,7 @@ def _driver_pagerank(spark, e: DataFrame, n: int, iterations: int, damping: floa
     all three test scales)."""
     import numpy as np
 
-    pdf = _collect_edge_pdf(e)
+    pdf = tables.arrow_to_pandas(e)
     src = pdf["src"].to_numpy(np.int64)
     dst = pdf["dst"].to_numpy(np.int64)
     w = pdf["w"].to_numpy(np.float64)
@@ -455,7 +440,7 @@ def _driver_lpa(spark, e: DataFrame, iterations: int):
     sensitivity at all."""
     import numpy as np
 
-    pdf = _collect_edge_pdf(e)
+    pdf = tables.arrow_to_pandas(e)
     src = pdf["src"].to_numpy(np.int64)
     dst = pdf["dst"].to_numpy(np.int64)
     w = pdf["w"].to_numpy(np.int64)

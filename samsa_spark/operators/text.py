@@ -679,7 +679,7 @@ def train_classifier(
     # cap — posting count grows with the corpus — the per-iteration Spark
     # reduction below runs unchanged.
     if stats.np is not None and stats.np <= CLS2_DRIVER_MAX_POSTINGS:
-        pdfs = _collect_feat_pdf(feat)
+        pdfs = tables.arrow_to_pandas(feat)
         lens = pdfs["bs"].map(len).to_numpy()
         keep = lens > 0
         bs = (
@@ -738,20 +738,6 @@ def train_classifier(
 # vanilla 1 GiB heap (note 48); posting count grows with the corpus, so a
 # 100 TB training set stays on the per-iteration Spark reduction.
 CLS2_DRIVER_MAX_POSTINGS = 2_000_000
-
-
-def _collect_feat_pdf(feat: "DataFrame"):
-    """Arrow-collect the sparse feature frame, forcing the Arrow transfer
-    for the duration of the call only (the external driver's vanilla
-    session has it off; see mining._collect_edge_pdf)."""
-    spark = feat.sparkSession
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(key, "false")
-    spark.conf.set(key, "true")
-    try:
-        return feat.toPandas()
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _classifier_weight_frame(documents: DataFrame, w, n_features: int) -> DataFrame:

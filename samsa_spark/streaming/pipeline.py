@@ -383,7 +383,7 @@ class StreamingExactDedupIndex:
             _tables.local_rows(
                 spark, [(int(batch_id),)], "batch_id bigint"
             ).write.mode("overwrite").parquet(f"{self.index_path}/bootstrap")
-            for sub in ("df", "ranked", "sets"):
+            for sub in ("df", "sets"):
                 spark.catalog.refreshByPath(f"{self.index_path}/{sub}")
             pairs = prefix_jaccard_pairs(batch_df, min_jaccard=self.min_jaccard)
             pairs.write.mode("overwrite").parquet(pair_dir)

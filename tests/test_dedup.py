@@ -1094,6 +1094,87 @@ def test_dd19_append_matches_fresh_rebuild(spark):
     assert {r.append_id for r in drift2.collect()} == {0, 1}
 
 
+def test_dd19_index_keeps_postings_in_one_ranked_table(spark, tmp_path):
+    """save_dedup_index and append_dedup_index keep the postings in ONE
+    table: no ``ranked`` directory, and one ``sets`` row per doc whose
+    ``ranked_shs`` is its shingle-hash set in the frozen ``(df, sh_h)``
+    order (a shingle unseen at save time ranks at df=0)."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from samsa_spark.operators.dedup import (
+        append_dedup_index,
+        save_dedup_index,
+        shingle_postings,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d x y"), (3, "a b c d e f g h")],
+        "doc_id long, text string",
+    )
+    p = str(tmp_path / "dd")
+    save_dedup_index(docs.where("doc_id < 3"), p)
+    assert sorted(os.listdir(p)) == ["df", "sets"]
+    append_dedup_index(spark, p, docs.where("doc_id = 3"))
+    assert sorted(os.listdir(p)) == ["df", "drift", "sets"]
+
+    sets = spark.read.parquet(f"{p}/sets")
+    assert sets.columns == ["doc_id", "n_sh", "ranked_shs"]
+    df = {r.sh_h: r.df for r in spark.read.parquet(f"{p}/df").collect()}
+    shs = {
+        r.doc_id: r.hs
+        for r in shingle_postings(docs)
+        .groupBy("doc_id")
+        .agg(F.collect_list(F.xxhash64("sh")).alias("hs"))
+        .collect()
+    }
+    got = {r.doc_id: (r.n_sh, r.ranked_shs) for r in sets.collect()}
+    want = {
+        d: (len(hs), sorted(hs, key=lambda h: (df.get(h, 0), h)))
+        for d, hs in shs.items()
+    }
+    assert got == want
+    assert any(h not in df for h in got[3][1])  # doc 3 brings unseen shingles
+
+
+def test_dd19_old_two_table_layout_fails_loudly(spark, tmp_path):
+    """An index in the old layout (per-posting ``ranked`` rows beside
+    unordered ``sets.shs`` arrays) must raise, not serve wrong prefixes:
+    the query and the append fail at analysis, and the append writes
+    nothing."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    from samsa_spark import index
+    from samsa_spark.operators.dedup import SHINGLE_K, dedup_against_index
+
+    p = str(tmp_path / "old")
+    spark.createDataFrame([(11, 1), (12, 2)], "sh_h long, df long").write.parquet(
+        f"{p}/df"
+    )
+    spark.createDataFrame(
+        [(1, 11, 1, 2), (1, 12, 2, 2)], "doc_id long, sh_h long, pos int, n_sh long"
+    ).write.parquet(f"{p}/ranked")
+    spark.createDataFrame(
+        [(1, [12, 11], 2)], "doc_id long, shs array<bigint>, n_sh long"
+    ).write.parquet(f"{p}/sets")
+    index._write_meta(spark, p, "dedup", shingle_k=SHINGLE_K)
+    before = sorted(os.listdir(f"{p}/sets"))
+    batch = spark.createDataFrame([(2, "a b c d e f")], "doc_id long, text string")
+
+    for call in (
+        lambda: index.query_dedup(spark, p, batch).collect(),
+        lambda: dedup_against_index(spark, p, batch).collect(),
+        lambda: index.append_dedup(spark, p, batch).collect(),
+    ):
+        with pytest.raises(AnalysisException, match="ranked_shs"):
+            call()
+    assert sorted(os.listdir(f"{p}/sets")) == before
+    assert not os.path.exists(f"{p}/drift")
+
+
 # --- dd17: exact suffix-array span dedup --------------------------------------
 
 

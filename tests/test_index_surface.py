@@ -159,7 +159,8 @@ def test_validate_clean_indexes_report_nothing(spark, tmp_path):
 def test_validate_flags_planted_corruption(spark, tmp_path):
     """Each kind's core invariant trips when violated: an IVF assignment
     pointing at a ghost cell, a graph neighbor outside its cell, a text
-    docfreq partial off by one, a dedup ranked/sets doc-set mismatch."""
+    docfreq partial off by one, a dedup doc stored twice and a dedup row
+    whose n_sh disagrees with its ranked array."""
     import pyspark.sql.functions as F
 
     from samsa_spark import index
@@ -207,9 +208,13 @@ def test_validate_flags_planted_corruption(spark, tmp_path):
 
     d = str(tmp_path / "d")
     index.save_dedup(docs.where("doc_id >= 20"), d)
+    sets = spark.read.parquet(f"{d}/sets")
+    # a second row for a stored doc (what a replayed, un-anti-joined
+    # append would write), then a row whose n_sh disagrees with its array
+    dup = sets.limit(1).collect()
     spark.createDataFrame(
-        [(424_242, [1, 2, 3], 3)], "doc_id long, shs array<bigint>, n_sh long"
+        dup + [(424_242, 5, [1, 2, 3])], sets.schema
     ).write.mode("append").parquet(f"{d}/sets")
     spark.catalog.refreshByPath(f"{d}/sets")
-    got = {r.problem for r in index.validate(spark, d).collect()}
-    assert "set_doc_without_ranked" in got
+    got = {r.problem: r.n for r in index.validate(spark, d).collect()}
+    assert got == {"duplicate_doc_id": 1, "n_sh_not_ranked_size": 1}

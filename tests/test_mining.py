@@ -320,6 +320,29 @@ def test_lp1_driver_regime_matches_distributed_loop(spark):
     assert fast == slow
 
 
+def test_arrow_to_pandas_restores_the_session_conf(spark):
+    """The driver-regime collect turns the Arrow transfer on for its own
+    call only: a conf the session never set is unset again afterwards,
+    and an explicit ``"false"`` stays ``"false"``."""
+    from samsa_spark import tables
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key, None)
+    df = spark.range(3)
+    try:
+        spark.conf.unset(key)
+        assert tables.arrow_to_pandas(df)["id"].tolist() == [0, 1, 2]
+        assert spark.conf.get(key, None) is None
+        spark.conf.set(key, "false")
+        assert tables.arrow_to_pandas(df)["id"].tolist() == [0, 1, 2]
+        assert spark.conf.get(key, None) == "false"
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def test_w2v1_hand_doc(spark):
     """'a b a' with window 2: every (center, context) pair enumerated by
     hand, ns weights = unigram^0.75 via the sqrt(sqrt(c^3)) form."""

@@ -1,15 +1,18 @@
-"""tests/slow_tests.txt cannot change silently: its size is pinned here, and
-the conftest hook refuses a full collection in which a listed id matches no
-test. Growing or shrinking the list means changing this pin in the same
+"""tests/slow_tests.txt cannot change silently: its size and a sha256 of its
+sorted ids are pinned here, and the conftest hook refuses a full collection
+in which a listed id matches no test. Growing, shrinking or editing the list
+(even swapping one id for another) means changing these pins in the same
 change, so the diff shows it."""
 
 from __future__ import annotations
 
 import ast
+import hashlib
 from pathlib import Path
 
 SLOW_LIST = Path(__file__).parent / "slow_tests.txt"
 PINNED_SIZE = 77
+PINNED_SHA256 = "8c39a9688592b6b6d5e756ed1cf129e5730ae0a87b84ed9cc155198a41321284"
 
 
 def _ids() -> list[str]:
@@ -20,6 +23,11 @@ def test_slow_list_size_is_pinned():
     ids = _ids()
     assert len(ids) == len(set(ids)), "duplicate ids in slow_tests.txt"
     assert len(ids) == PINNED_SIZE
+
+
+def test_slow_list_content_is_pinned():
+    digest = hashlib.sha256("\n".join(sorted(_ids())).encode()).hexdigest()
+    assert digest == PINNED_SHA256
 
 
 def test_every_slow_listed_file_keeps_a_default_test():
