@@ -342,8 +342,9 @@ EXTRAS_R12 = [
     # round 12 (continuation): TextRank keyword extraction (co-occurrence
     # graph + 5 broadcast-rank power iterations).
     "kx1_textrank_keywords",
-    # round 12 (continuation): sq1 as a first-occurrence fold stream
-    # (timed end-to-end incl. checkpoint + multi-trigger replay).
+    # round 12 (continuation): sq1 as a first-occurrence stream, a
+    # min(struct(ts_us, event_id)) streaming aggregate (timed end-to-end
+    # incl. checkpoint + multi-trigger replay).
     "st11_streaming_adoption_order",
     # round 12 (continuation): unigram-LM tokenizer hard-EM training
     # (vocabulary-factorized; warm floor ~2.4s, cold dominated by codegen).

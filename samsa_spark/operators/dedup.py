@@ -29,6 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from samsa_spark import tables
+from samsa_spark.session import scoped_conf
 
 N_MINHASH = 64
 N_BANDS = 16
@@ -1130,14 +1131,10 @@ def append_dedup_index(
         F.round(F.sum("n_unseen") / F.sum("n_sh"), 6).alias("unseen_fraction"),
     ).withColumn("append_id", F.lit(next_id))
     if append_id is not None:
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
             drift.coalesce(1).write.mode("overwrite").partitionBy(
                 "append_id"
             ).parquet(f"{path}/drift")
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     else:
         drift.coalesce(1).write.mode("append").partitionBy("append_id").parquet(
             f"{path}/drift"
@@ -2354,12 +2351,8 @@ def dedup_clusters(documents: DataFrame, min_jaccard: float = 0.1, max_iter: int
     # iteration), so a shuffle-partition pin + restore genuinely scopes it:
     # on a vanilla 200-partition session each tiny iteration would
     # otherwise run 200 tasks.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
         labels = _propagate_labels(documents, min_jaccard, max_iter)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     lab = labels.select("doc_id", F.col("label").alias("canonical_id"))
     sizes = lab.groupBy("canonical_id").agg(F.count("*").alias("cluster_size"))
     return lab.join(sizes, "canonical_id").select("doc_id", "canonical_id", "cluster_size")

@@ -39,6 +39,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from samsa_spark import tables
+from samsa_spark.session import scoped_conf
 
 # Bit-spread masks for interleaving 16-bit dims into a 32-bit-per-dim
 # Morton code (the classic magic-number spread; each step doubles the gap
@@ -193,10 +194,11 @@ def write_zordered(
     # the session. Asking for a key per input row makes the sample every row
     # up to Spark's own 1e6-key sample cap, so the boundaries are exact
     # quantiles of z there and a bounded sample beyond it.
-    sample_conf = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-    prev = spark.conf.get(sample_conf, None)
-    spark.conf.set(sample_conf, str(max(100, -(-n_rows // n_files))))
-    try:
+    with scoped_conf(
+        spark,
+        "spark.sql.execution.rangeExchange.sampleSizePerPartition",
+        str(max(100, -(-n_rows // n_files))),
+    ):
         (
             df.withColumn("_z", zvalue_nd(q, bits))
             .repartitionByRange(n_files, F.col("_z"))
@@ -205,11 +207,6 @@ def write_zordered(
             .write.mode("overwrite")
             .parquet(f"{path}/data")
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(sample_conf)
-        else:
-            spark.conf.set(sample_conf, prev)
     manifest = (
         spark.read.parquet(f"{path}/data")
         .select(

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from samsa_spark import tables
 from samsa_spark.operators.dedup import propagate_min_labels
+from samsa_spark.session import scoped_conf
 
 # Shared default so the registered query and the oracle cannot drift
 # (the LINE_DEDUP_MIN_COUNT rule). Edit distance 2 is the SymSpell-family
@@ -85,14 +86,10 @@ def _name_labels(names: DataFrame, max_dist: int) -> DataFrame:
     # The propagation loop EXECUTES here (convergence count per iteration):
     # pin shuffle partitions so tiny name-type iterations don't run 200
     # tasks on a vanilla session (dd6's scoping pattern).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
         labels = propagate_min_labels(
             names.select(F.col("p_name").alias("id")), edges, max_iter=ER1_MAX_ITER
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return labels.select(
         F.col("id").alias("p_name"), F.col("label").alias("entity_name")
     )

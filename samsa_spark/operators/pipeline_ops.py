@@ -21,6 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from samsa_spark import tables
+from samsa_spark.session import scoped_conf
 
 
 def label_centroids(embeddings: DataFrame) -> DataFrame:
@@ -912,9 +913,7 @@ def compact_shards(
     # keep the untouched partitions' manifest rows off the parquet source
     # before overwriting it (self-overwrite guard), then patch.
     kept = manifest.where(~pred).localCheckpoint()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         (
             sel.repartition(len(need), *part_cols)
             .write.mode("overwrite")
@@ -922,8 +921,6 @@ def compact_shards(
             .partitionBy(*part_cols)
             .parquet(f"{path}/data")
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     # the shared FileStatusCache still lists the pre-overwrite files for
     # this path — drop it or the fresh scan reads deleted parquet.
     spark.catalog.refreshByPath(f"{path}/data")

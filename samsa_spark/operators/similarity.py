@@ -25,6 +25,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
 from samsa_spark import tables
+from samsa_spark.session import scoped_conf
 
 # Multi-table random-hyperplane LSH: L tables of B sign bits each. A pair is
 # a candidate if it collides in ANY table — L small tables trade precision
@@ -585,14 +586,10 @@ def semantic_dedup(
     spark = embeddings.sparkSession
     # The propagation loop EXECUTES here (count per iteration) — pin tiny
     # shuffles for it, restore after (same scoping as dd6).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
         labels = propagate_min_labels(
             base.select(F.col("vec_id").alias("id")), pairs, max_iter
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     lab = labels.select(F.col("id").alias("vec_id"), F.col("label").alias("rep_id"))
     sizes = lab.groupBy("rep_id").agg(F.count("*").alias("group_size"))
     return lab.join(sizes, "rep_id").select(
@@ -2146,14 +2143,10 @@ def append_index(
     )
     if append_id is not None:
         # replace exactly this append's rows on retry, touch no others
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
             drift.coalesce(1).write.mode("overwrite").partitionBy(
                 "append_id"
             ).parquet(f"{path}/drift")
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     else:
         drift.coalesce(1).write.mode("append").partitionBy("append_id").parquet(
             f"{path}/drift"
@@ -3182,14 +3175,10 @@ def append_graph(spark: SparkSession, path: str, new_vectors: DataFrame) -> Data
     rebuilt = combined.groupBy("cell").applyInPandas(
         _cell_graph_builder(m, ne), _GX_GRAPH_SCHEMA
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         rebuilt.write.mode("overwrite").partitionBy("cell").parquet(
             f"{path}/graph"
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     # the overwritten partitions invalidate the session's cached file
     # listing for this path (note 28)
     spark.catalog.refreshByPath(f"{path}/graph")

@@ -29,6 +29,7 @@ from samsa_spark.operators import (
     state,
     text,
 )
+from samsa_spark.session import scoped_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -213,12 +214,8 @@ def _run_streaming_state(
     # The state store instantiates one RocksDB per shuffle partition; a
     # vanilla session's 200 partitions means 200 stores for a toy log. Pin a
     # sane count for this fresh checkpoint, restore the caller's conf after.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         ss.run_available_now(file_stream(spark, src, ev.schema, max_files_per_trigger=2), chk)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     _rm_staged(src)
     st = read_state(spark, chk)
     return st.select(
@@ -286,9 +283,7 @@ def _streaming_custom_fold(spark: SparkSession, sf: str) -> DataFrame:
         state_ddl="n_events bigint, cents bigint",
         output_ddl="user_id bigint, n_events bigint, cents bigint",
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             out.writeStream.format("noop")
             .outputMode("update")
@@ -297,8 +292,6 @@ def _streaming_custom_fold(spark: SparkSession, sf: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     _rm_staged(src)
     st = read_state(spark, chk)
     return st.select(
@@ -321,10 +314,11 @@ def _streaming_adoption_order(spark: SparkSession, sf: str) -> DataFrame:
     """st11 — sq1's sequential-pattern support maintained as a STREAM: the
     event backlog replays multi-trigger (unordered files, so 'earlier'
     events routinely arrive late) into a per-(user, type) first-occurrence
-    fold; the final state store IS the firsts table, and the same pattern
-    join as batch sq1 runs over it. Shares sq1's oracle by construction —
-    the min fold is idempotent/commutative, so replay order cannot move
-    the result."""
+    state, the streaming form of sq1's ``min(struct(ts_us, event_id))``
+    aggregate; the final state store IS the firsts table, and the same
+    pattern join as batch sq1 runs over it. Shares sq1's oracle by
+    construction — min is idempotent/commutative, so replay order cannot
+    move the result."""
     import os
     import tempfile
 
@@ -333,21 +327,13 @@ def _streaming_adoption_order(spark: SparkSession, sf: str) -> DataFrame:
     from samsa_spark.operators.mining import adoption_support_from_firsts
     from samsa_spark.streaming.pipeline import run_first_occurrence_stream
 
-    ev = tables.load(spark, sf, "events").select(
-        F.concat_ws("|", F.col("user_id").cast("string"), "event_type").alias("k"),
-        "ts_us",
-        "event_id",
-    )
+    ev = tables.load(spark, sf, "events").select("user_id", "event_type", "ts_us", "event_id")
     base = tempfile.mkdtemp(prefix="samsa-st11-")
     src = os.path.join(base, "src")
     ev.repartition(4).write.parquet(src)
     st = run_first_occurrence_stream(spark, src, os.path.join(base, "chk"), ev.schema)
     _rm_staged(src)
-    firsts = st.select(
-        F.split("k", "\\|").getItem(0).cast("long").alias("user_id"),
-        F.split("k", "\\|").getItem(1).alias("event_type"),
-        F.struct("ts_us", "event_id").alias("f"),
-    )
+    firsts = st.select("user_id", "event_type", F.struct("ts_us", "event_id").alias("f"))
     nu = firsts.select("user_id").distinct().count()
     return adoption_support_from_firsts(firsts, nu)
 
@@ -381,9 +367,7 @@ def _streaming_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
     docs.repartition(4).write.parquet(src)
     out = os.path.join(base, "out")
     dd = dedup_stream(file_stream(spark, src, docs.schema, max_files_per_trigger=2), ["sha"], late=None)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             dd.writeStream.format("parquet")
             .option("path", out)
@@ -393,8 +377,6 @@ def _streaming_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     _rm_staged(src)
     return spark.read.parquet(out)
 
@@ -433,9 +415,7 @@ def _streaming_static_enrich(spark: SparkSession, sf: str) -> DataFrame:
     enriched = enrich(
         file_stream(spark, src, ev.schema, max_files_per_trigger=2), customer
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             enriched.writeStream.format("parquet")
             .option("path", out)
@@ -445,8 +425,6 @@ def _streaming_static_enrich(spark: SparkSession, sf: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     _rm_staged(src)
     return spark.read.parquet(out)
 
@@ -508,9 +486,7 @@ def _streaming_windowed_counts(spark: SparkSession, sf: str) -> DataFrame:
         late=f"{delay_us} microseconds",
     )
     out = os.path.join(base, "out")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             win.writeStream.format("parquet")
             .option("path", out)
@@ -520,8 +496,6 @@ def _streaming_windowed_counts(spark: SparkSession, sf: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     _rm_staged(src)
     return spark.read.parquet(out).where(F.col("user_id") != -1)
 
@@ -588,9 +562,7 @@ def _streaming_attribution_join(spark: SparkSession, sf: str) -> DataFrame:
     ).select("purchase_id", "p_user_id", "p_ts_us", "click_id", "c_ts_us")
 
     out = os.path.join(base, "out")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             joined.writeStream.format("parquet")
             .option("path", out)
@@ -600,8 +572,6 @@ def _streaming_attribution_join(spark: SparkSession, sf: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     _rm_staged(src_c)
     _rm_staged(src_p)
     return spark.read.parquet(out)
@@ -678,9 +648,7 @@ def _streaming_session_windows(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     out = os.path.join(base, "out")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             win.writeStream.format("parquet")
             .option("path", out)
@@ -690,8 +658,6 @@ def _streaming_session_windows(spark: SparkSession, sf: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     _rm_staged(src)
     return spark.read.parquet(out).where(F.col("user_id") != -1)
 
@@ -786,9 +752,7 @@ def _streaming_outer_join(spark: SparkSession, sf: str) -> DataFrame:
     ).select("purchase_id", "p_user_id", "p_ts_us", "click_id", "c_ts_us")
 
     out = os.path.join(base, "out")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             joined.writeStream.format("parquet")
             .option("path", out)
@@ -798,8 +762,6 @@ def _streaming_outer_join(spark: SparkSession, sf: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     _rm_staged(src_c)
     _rm_staged(src_p)
     return spark.read.parquet(out).where(F.col("purchase_id") != -1)
@@ -847,8 +809,6 @@ def _streaming_exact_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     sink = StreamingExactDedupIndex(
         os.path.join(base, "index"), os.path.join(base, "pairs")
     )
-    # gate-scale pinning (8) lives inside the runner now; volume deployments
-    # pass shuffle_partitions ≈ cores (PLANS.md streaming-knob sweep).
     run_streaming_exact_dedup(
         file_stream(spark, src, docs.schema, max_files_per_trigger=2),
         os.path.join(base, "chk"),
@@ -898,17 +858,13 @@ def _streaming_quantile_digest(spark: SparkSession, sf: str) -> DataFrame:
         os.path.join(base, "digest"), value_col="value", group_col="event_type",
         width=_ST12_WIDTH,
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         run_streaming_digest(
             file_stream(spark, src, ev.schema, max_files_per_trigger=2),
             os.path.join(base, "chk"),
             acc,
         )
         out = acc.quantiles(spark)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     _rm_staged(src)
     return out
 
@@ -977,17 +933,13 @@ def _streaming_entity_resolution(spark: SparkSession, sf: str) -> DataFrame:
     resolver = StreamingEntityResolver(
         os.path.join(base, "emap"), os.path.join(base, "out")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         run_streaming_entity_resolution(
             file_stream(spark, src, part.schema, max_files_per_trigger=2),
             os.path.join(base, "chk"),
             resolver,
         )
         out = resolver.resolved(spark)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     _rm_staged(src)
     return out
 
@@ -1138,7 +1090,7 @@ _DEMOTED = (
     "cl1_cluster_quality",            # sim4/qz4 anchor the IVF quantizer stack in-window (cl1 reuses sim6's exact one-Lloyd-step cents verbatim); the per-cell membership/margin/separation audit is pytest planted-geometry tested + oracle-checked
     "gw1_deepwalk_corpus",            # pr1/lp1 keep the graph tier covered and w2v1 its consumer; the deterministic DeepWalk corpus (hash-selected steps over sorted adjacency, frontier stays node-shaped) is pytest hand-walk tested + unrolled-step oracle-checked
     "kx1_textrank_keywords",          # tf1/hh1 anchor term-salience shapes in-window; the TextRank keyword extractor (w2v1's in-row co-occurrence windowing + pr1's broadcast-rank power iteration) is pytest salience-ordering tested + unrolled-CTE oracle-checked
-    "st11_streaming_adoption_order",  # st1/st2/st3 keep the streaming engine in-window; the first-occurrence fold stream (state store == sq1's firsts table; min fold idempotent under replay) shares sq1's oracle by construction and is pytest late-arrival tested
+    "st11_streaming_adoption_order",  # st1/st2/st3 keep the streaming engine in-window; the first-occurrence stream (state store == sq1's firsts table; its min(struct) aggregate idempotent under replay) shares sq1's oracle by construction and is pytest late-arrival tested
     # round-13 rotation: fp1 (market-basket mining), tc1 (graph census) and
     # sq1 (sequential patterns) promote behind the driver's gate; three
     # long-green twins rotate out.

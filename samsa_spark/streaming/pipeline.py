@@ -18,6 +18,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from samsa_spark.operators.state import compact_latest, upsert_merge
+from samsa_spark.session import scoped_conf
+
+# Shuffle partitions the stream runners below hold for a query's lifetime:
+# a fresh checkpoint keeps one RocksDB state store per partition, and a
+# vanilla session's 200 would mean 200 stores for a gate-scale backlog.
+STREAM_PARTITIONS = "8"
 
 
 def dedup_stream(
@@ -402,24 +408,14 @@ def run_streaming_exact_dedup(
     stream_df: DataFrame,
     checkpoint_dir: str,
     sink: StreamingExactDedupIndex,
-    shuffle_partitions: int | None = 8,
 ):
     """Drain a document stream through the exact dedup index with
-    AvailableNow.
-
-    ``shuffle_partitions`` pins the conf for the stream's lifetime
-    (restored after), covering both the stream's own stateful stage and
-    the per-batch relational pipeline inside the sink. The default 8 is
-    the GATE-SCALE setting (note 8: one RocksDB store per partition on a
-    fresh checkpoint of a toy backlog); a volume deployment pins ≈ cores —
-    the per-batch join/aggregate work dominates there and 8 serializes it
-    (PLANS.md streaming-knob sweep). ``None`` leaves the session conf
-    untouched."""
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(shuffle_partitions)))
-    try:
+    AvailableNow, at ``STREAM_PARTITIONS`` shuffle partitions for the
+    stream's lifetime (restored after). They also size the per-batch
+    relational pipeline inside the sink, which is join- and scan-bound:
+    8, 16 and 32 partitions drained st10 in 11.0, 10.5 and 11.9 s warm
+    (PLANS.md, "Streaming engine knobs")."""
+    with scoped_conf(stream_df.sparkSession, "spark.sql.shuffle.partitions", STREAM_PARTITIONS):
         q = (
             stream_df.writeStream.foreachBatch(sink)
             .option("checkpointLocation", checkpoint_dir)
@@ -427,8 +423,6 @@ def run_streaming_exact_dedup(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return q
 
 
@@ -689,67 +683,45 @@ def run_first_occurrence_stream(
     checkpoint_dir: str,
     schema,
     max_files_per_trigger: int = 2,
-    shuffle_partitions: int | None = 8,
 ):
     """st11's engine half: fold a keyed event backlog into per-key FIRST
-    occurrences — state per composite key ``k`` is the lexicographic min
-    (ts_us, event_id), so an 'earlier' event arriving in a LATER trigger
-    (out-of-order files are the norm) must overwrite the stored first.
-    Returns the final state as ``(k, ts_us, event_id)``.
+    occurrences. The key is every ``schema`` column other than ``ts_us`` and
+    ``event_id``; the state per key is ``min(struct(ts_us, event_id))``, a
+    streaming aggregate in update mode on the RocksDB store, so the engine
+    owns the fold and no Python worker starts. An 'earlier' event arriving
+    in a LATER trigger (out-of-order files are the norm) overwrites the
+    stored first. Returns the final state as ``(key..., ts_us, event_id)``.
 
-    The min fold is idempotent and commutative, which is what makes the
-    multi-trigger replay exactly equal to the batch groupBy-min — and a
-    retried trigger harmless (same min twice).
+    ``min`` is idempotent and commutative, which is what makes the
+    multi-trigger replay exactly equal to batch sq1's groupBy-min, and a
+    retried trigger harmless (same min twice). The stream holds
+    ``STREAM_PARTITIONS`` shuffle partitions (restored after): with no
+    Python worker per partition, 8 drained a 1M-event backlog faster than
+    32 (CHANGES.md).
 
-    ``shuffle_partitions`` pins the conf for the stream's lifetime
-    (restored after). The default 8 is the GATE-SCALE setting (note 8:
-    one fresh-checkpoint RocksDB store per partition on a toy backlog);
-    this is a PANDAS fold — one Python worker per partition — so a volume
-    deployment pins ≈ cores instead (note 14: measured 3.1x at 10M
-    events, 32 vs 8; re-measured for this runner in the PLANS.md
-    streaming-knob sweep). ``None`` leaves the session conf untouched."""
+    Start from a fresh checkpoint. One written by this runner's former
+    pandas fold (``applyInPandasWithState`` over a composite string key)
+    does not resume here: the first trigger with new data raises Spark's
+    ``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`` and returns
+    no rows. (With no new data no trigger runs, and the old state comes
+    back unchanged in its old ``(k, ts_us, event_id)`` layout.)"""
     from samsa_spark.streaming.sources import file_stream
-    from samsa_spark.streaming.state_stream import read_state, stateful_transform
+    from samsa_spark.streaming.state_stream import _select_store, read_state
 
-    stream = file_stream(
-        spark, src_dir, schema, max_files_per_trigger=max_files_per_trigger
+    _select_store(spark, "rocksdb")
+    keys = [c for c in schema.fieldNames() if c not in ("ts_us", "event_id")]
+    firsts = (
+        file_stream(spark, src_dir, schema, max_files_per_trigger=max_files_per_trigger)
+        .groupBy(*keys)
+        .agg(F.min(F.struct("ts_us", "event_id")).alias("first"))
     )
-
-    def fold(key, prior, pdf):
-        # numpy lexsort-min, not pdf.sort_values().iloc[0]: the fold runs
-        # once per KEY per trigger over a tiny frame, and pandas sort +
-        # iloc costs ~0.2 ms/key — at 7.5k keys that was ~25% of the whole
-        # drain (r15 A/B: 8.2 -> 6.2 s). Same (ts_us, event_id) lexicographic
-        # min, note-44's vectorized-min discipline one level down.
-        import numpy as np
-
-        ts = pdf["ts_us"].to_numpy(np.int64)
-        ei = pdf["event_id"].to_numpy(np.int64)
-        i = np.lexsort((ei, ts))[0]
-        cand = (int(ts[i]), int(ei[i]))
-        if prior is not None and (int(prior[0]), int(prior[1])) <= cand:
-            return (int(prior[0]), int(prior[1])), None
-        return cand, None
-
-    out = stateful_transform(
-        stream,
-        "k",
-        fold,
-        state_ddl="ts_us bigint, event_id bigint",
-        output_ddl="k string",
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(shuffle_partitions)))
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", STREAM_PARTITIONS):
         q = (
-            out.writeStream.format("noop")
+            firsts.writeStream.format("noop")
             .outputMode("update")
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return read_state(spark, checkpoint_dir)

@@ -506,6 +506,8 @@ def read_state(spark: SparkSession, checkpoint_dir: str, drop_tombstoned: bool =
     """Queryable state (reference ``query(key)`` from outside the operator,
     storage.py:208-219): read the operator's state store directly from the
     checkpoint via the state data source, flattened to key + state columns.
+    A pandas fold's ``groupState`` and a one-column ``max(struct)`` or
+    ``min(struct)`` aggregate buffer are unwrapped to the struct's fields.
 
     Marker-mode deletions (see :class:`StatefulStream`) keep ``_tombstoned``
     rows in the store as high-water marks; ``drop_tombstoned`` hides them —
@@ -525,10 +527,11 @@ def read_state(spark: SparkSession, checkpoint_dir: str, drop_tombstoned: bool =
     value_names = [f.name for f in value_type.fields]
     # applyInPandasWithState wraps the user state struct in a `groupState`
     # field (plus an engine-side `timeoutTimestamp` when a timeout conf —
-    # e.g. the TTL option — is active), and the native aggregate stores it
-    # as its `max` buffer; unwrap either so callers see their own state
-    # columns and never the engine bookkeeping.
-    if value_names[:1] == ["groupState"] or value_names == ["max"]:
+    # e.g. the TTL option — is active), and a native aggregate stores it as
+    # its `max` (StatefulStream) or `min` (run_first_occurrence_stream)
+    # buffer; unwrap any of them so callers see their own state columns and
+    # never the engine bookkeeping.
+    if value_names[:1] == ["groupState"] or value_names in (["max"], ["min"]):
         wrapper = value_type.fields[0]
         val_fields = [f"value.{wrapper.name}.{f.name}" for f in wrapper.dataType.fields]
     else:

@@ -27,6 +27,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
+from samsa_spark.session import scoped_conf
+
 TABLES = [
     "region",
     "nation",
@@ -62,25 +64,13 @@ def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
-_ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
-
-
 def arrow_to_pandas(df: DataFrame):
     """``df.toPandas()`` over the Arrow transfer, enabled for the duration
     of the call only: the external driver's vanilla session has it off,
     and flipping it for good could change how that session's OWN
-    ``toPandas`` comparisons materialize. The session's previous value is
-    restored, and a conf the session never set is unset again."""
-    spark = df.sparkSession
-    prev = spark.conf.get(_ARROW_CONF, None)
-    spark.conf.set(_ARROW_CONF, "true")
-    try:
+    ``toPandas`` comparisons materialize (:func:`session.scoped_conf`)."""
+    with scoped_conf(df.sparkSession, "spark.sql.execution.arrow.pyspark.enabled", "true"):
         return df.toPandas()
-    finally:
-        if prev is None:
-            spark.conf.unset(_ARROW_CONF)
-        else:
-            spark.conf.set(_ARROW_CONF, prev)
 
 
 def _single_row_group_rows(path: str) -> int | None:

@@ -1460,58 +1460,6 @@ def sweep_iterative(spark) -> None:
         tables.free_checkpoint(li)
 
 
-def sweep_streamknob(spark) -> None:
-    """run_first_occurrence_stream's shuffle_partitions knob at a 10x
-    event backlog (~1M rows): 8 (the gate-scale fresh-checkpoint default)
-    vs 32 (= cores — the volume setting note 14 predicts for a PANDAS
-    fold, where each partition is one Python worker + one RocksDB store)."""
-    import os
-    import tempfile
-    import time as _t
-
-    import pyspark.sql.functions as F
-
-    from samsa_spark import tables
-    from samsa_spark.streaming.pipeline import run_first_occurrence_stream
-
-    ev = tables.load(spark, SF_DIR, "events").select(
-        F.concat_ws("|", F.col("user_id").cast("string"), "event_type").alias("k"),
-        "ts_us",
-        "event_id",
-    )
-    reps = spark.range(10).select(F.col("id").alias("_r"))
-    big = ev.crossJoin(F.broadcast(reps)).select(
-        F.concat_ws("|", F.col("k"), F.col("_r").cast("string")).alias("k"),
-        "ts_us",
-        (F.col("event_id") + F.col("_r") * 1_000_000_000).alias("event_id"),
-    )
-    n = big.count()
-    base = tempfile.mkdtemp(prefix="samsa-knob-")
-    src = os.path.join(base, "src")
-    big.repartition(8).write.parquet(src)
-    for parts in (8, 32):
-        chk = os.path.join(base, f"chk{parts}")
-        t0 = _t.time()
-        st = run_first_occurrence_stream(
-            spark, src, chk, big.schema, max_files_per_trigger=4, shuffle_partitions=parts
-        )
-        rows = st.count()
-        print(
-            json.dumps(
-                {
-                    "measure": f"st11_fold_parts{parts}_x10",
-                    "rows": n,
-                    "state_keys": rows,
-                    "sec": round(_t.time() - t0, 2),
-                }
-            ),
-            flush=True,
-        )
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
-
-
 def sweep_r13ops(spark) -> None:
     """Round-13 operators at 1x and 10x: zo1/ar1 over replicated lineitem
     (both key spaces shift — the catalog grows with the data), cls3/nv1
@@ -1588,7 +1536,6 @@ _SWEEPS = (
     ("spans", sweep_spans),
     ("graph", sweep_graph),
     ("iterative", sweep_iterative),
-    ("streamknob", sweep_streamknob),
     ("r13ops", sweep_r13ops),
 )
 

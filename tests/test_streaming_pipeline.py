@@ -821,38 +821,39 @@ def test_streaming_exact_dedup_sink_retry_exactly_once(spark, tmp_path):
 
 
 def test_first_occurrence_stream_late_arrival_overwrites(spark, tmp_path):
-    """st11's fold: a LATER trigger delivering an EARLIER event must
-    overwrite the stored first occurrence. File processing order is forced
-    via modification times (FileStreamSource picks oldest-mtime first)."""
+    """st11's first-occurrence state: a LATER trigger delivering an EARLIER
+    event must overwrite the stored first. The key is every column other
+    than ts_us/event_id (here the two-column ``(user_id, event_type)``), and
+    the state comes back unwrapped from the aggregate's ``min`` buffer. File
+    processing order is forced via modification times (FileStreamSource
+    picks oldest-mtime first)."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from samsa_spark.streaming.pipeline import run_first_occurrence_stream
 
+    schema = spark.createDataFrame(
+        [(7, "view", 100, 9)], "user_id bigint, event_type string, ts_us long, event_id long"
+    ).schema
     src = tmp_path / "src"
     src.mkdir()
-    # file a (processed first): the LATE-timestamped event; file b
-    # (processed second): the true first occurrence
-    pq.write_table(
-        pa.Table.from_pandas(pd.DataFrame({"k": ["7|view"], "ts_us": [100], "event_id": [9]})),
-        str(src / "a.parquet"),
-    )
-    pq.write_table(
-        pa.Table.from_pandas(pd.DataFrame({"k": ["7|view"], "ts_us": [5], "event_id": [3]})),
-        str(src / "b.parquet"),
-    )
-    os.utime(str(src / "a.parquet"), (1_000, 1_000))
-    os.utime(str(src / "b.parquet"), (2_000, 2_000))
-    schema = spark.createDataFrame(
-        [("7|view", 100, 9)], "k string, ts_us long, event_id long"
-    ).schema
+    # file a (processed first): the LATE-timestamped event, plus the same
+    # user's other type; file b (processed second): the true first
+    # occurrence of (7, view)
+    files = {
+        "a": {"user_id": [7, 7], "event_type": ["view", "click"], "ts_us": [100, 50], "event_id": [9, 8]},
+        "b": {"user_id": [7], "event_type": ["view"], "ts_us": [5], "event_id": [3]},
+    }
+    for i, (name, cols) in enumerate(files.items()):
+        path = str(src / f"{name}.parquet")
+        pq.write_table(pa.Table.from_pandas(pd.DataFrame(cols)), path)
+        os.utime(path, (1_000 * (i + 1), 1_000 * (i + 1)))
     st = run_first_occurrence_stream(
         spark, str(src), str(tmp_path / "chk"), schema, max_files_per_trigger=1
     )
-    rows = st.collect()
-    assert len(rows) == 1
-    assert (rows[0].k, rows[0].ts_us, rows[0].event_id) == ("7|view", 5, 3)
+    assert st.columns == ["user_id", "event_type", "ts_us", "event_id"]
+    assert sorted(tuple(r) for r in st.collect()) == [(7, "click", 50, 8), (7, "view", 5, 3)]
 
 
 def test_streaming_adoption_order_equals_batch(spark):
